@@ -36,6 +36,23 @@ object CacheLifecycle {
     df
   }
 
+  /** [[persist]] `df` and return it re-rooted on a `LogicalRDD` leaf
+    * over its cache scan (rows stay `InternalRow`), so operators
+    * downstream analyze, optimize and print a few-node plan instead of
+    * `df`'s lineage. After [[release]] the leaf recomputes through the
+    * cached RDD's lineage.
+    *
+    * Use it for a deep intermediate that several Dataset-built
+    * consumers read; plain [[persist]] otherwise, because the leaf
+    *  - is eager: planning it runs `df`'s shuffle stages now;
+    *  - stops column pruning and filter pushdown: fine for
+    *    jurisdiction-sized layers, not for wide bulk tables;
+    *  - is a new RDD per call, so a persist reading it never matches
+    *    across rebuilds: callers rebuilt per rep memoize instead.
+    */
+  def persistLeaf(df: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftColumnBridge.leaf(persist(df))
+
   /** Register a callback run on every [[release]] — memo caches that
     * hand out references to tracked DataFrames (e.g. ExtQueries'
     * candidate memo) must evict alongside, or they would keep serving

@@ -116,9 +116,10 @@ object SpatialOps {
     val bId = withRowKey(b, "__bid").withColumnRenamed(geomCol, "__bgeom")
 
     // pairs feeds three consumers (intersection pieces + both leftover
-    // branches): persist so the spatial join runs once, not three times
-    val pairs = SpatialJoin.broadcastIntersects(aId, bId, "__ageom", "__bgeom")
-      .transform(graft.CacheLifecycle.persist(_))
+    // branches): persist so the spatial join runs once, not three times,
+    // and re-root on a leaf so the three branches plan a short tree
+    val pairs = graft.CacheLifecycle.persistLeaf(
+      SpatialJoin.broadcastIntersects(aId, bId, "__ageom", "__bgeom"))
 
     // (1) intersection pieces, polygonal component only
     val inter = pairs

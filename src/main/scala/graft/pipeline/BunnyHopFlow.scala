@@ -7,14 +7,15 @@ import graft.geom.{GeomFunctions => G}
 import graft.operators.{Calc, JoinField, SpatialOps}
 import BunnyHopConfig._
 
-/** The BunnyHop pipeline DAG (SURVEY §3, E1/E2/E3) as one lazy Spark
-  * plan per branch: GNIS (E2, `bunny.py:26-104`), Census
-  * (`bunny.py:106-157` + `retrieve.py:97-135`), and the spatial CDTFA
-  * core (E3, `bunny.py:160-531`). Where the reference materializes six
-  * file-GDB tables per branch, here each branch is a single pipelined
-  * stage; only the dissolves, overlays and joins shuffle, and the two
-  * layer branches are cached at their reuse points (consumed by joins,
-  * coastal cut, erase and merge).
+/** The BunnyHop pipeline DAG (SURVEY §3, E1/E2/E3): GNIS (E2,
+  * `bunny.py:26-104`), Census (`bunny.py:106-157` +
+  * `retrieve.py:97-135`), and the spatial CDTFA core (E3,
+  * `bunny.py:160-531`). Where the reference materializes six file-GDB
+  * tables per branch, here the plan stays lazy up to its reuse points
+  * (the repaired CDTFA input, each overlay's pair table, the published
+  * layers), where it is cached and re-rooted on a leaf
+  * (`CacheLifecycle.persistLeaf`), so downstream operators plan a
+  * few-node tree, not the whole DAG.
   */
 object BunnyHopFlow {
 
@@ -81,10 +82,10 @@ object BunnyHopFlow {
     // persist BEFORE the guard count: the count is the deliberate
     // materialization barrier, so let it double as the cache warm-up —
     // counting the uncached plan and caching afterwards ran the full
-    // repair scan (st_makevalid on every geometry) twice. Registered
-    // persist (not raw .cache()) so CacheLifecycle.release can drop it.
-    val repaired = cdtfa.withColumn("geom", G.st_makevalid(col("geom")))
-      .transform(graft.CacheLifecycle.persist(_))
+    // repair scan (st_makevalid on every geometry) twice. Counting the
+    // leaf reads through the cache scan, so it fills the cache too.
+    val repaired = graft.CacheLifecycle.persistLeaf(
+      cdtfa.withColumn("geom", G.st_makevalid(col("geom"))))
     val n = repaired.count()
     if (n < minRecords)
       throw new IllegalStateException(
@@ -260,6 +261,11 @@ object BunnyHopFlow {
   /** E1/E3 — the whole flow. Inputs are already-loaded DataFrames
     * (sources are injected: GNIS pipe-CSV, census xlsx, DLA table,
     * CDTFA + coastline feature services in EPSG:3857).
+    *
+    * Eager at the leaf boundaries: the call runs the shuffle stages
+    * of the repaired input, both overlays and the three published
+    * layers, which come back as cache-backed leaves. Column pruning
+    * stops at a leaf: a consumer of a few columns scans them all.
     */
   def run(
       gnisRaw: DataFrame,
@@ -288,23 +294,19 @@ object BunnyHopFlow {
     // into and de-parallelize the expensive overlay/sliver stage
     // upstream) adds one tiny one-time exchange and cuts every warm
     // read to a handful of tasks.
-    // registered persists (not raw .cache()): CacheLifecycle.release
-    // must be able to drop these — a consumer releasing between sweeps
-    // would otherwise leak four orphaned cached frames per rebuild
-    val cities = finalizeLayer(coastalCut(citiesJoined, coastline))
-      .repartition(CachedLayerPartitions)
-      .transform(graft.CacheLifecycle.persist(_))
-    val counties = finalizeLayer(coastalCut(countiesJoined, coastline))
-      .drop(PlaceAbbr)                                        // bunny.py:391
-      .repartition(CachedLayerPartitions)
-      .transform(graft.CacheLifecycle.persist(_))
+    val cities = graft.CacheLifecycle.persistLeaf(
+      finalizeLayer(coastalCut(citiesJoined, coastline))
+        .repartition(CachedLayerPartitions))
+    val counties = graft.CacheLifecycle.persistLeaf(
+      finalizeLayer(coastalCut(countiesJoined, coastline))
+        .drop(PlaceAbbr)                                      // bunny.py:391
+        .repartition(CachedLayerPartitions))
 
     // cached too: the erase is recomputed per consumer otherwise, and
     // unincorporated areas are read by both the publish sinks and the
     // unincorporated-layer entry
-    val uninc = unincorporated(counties, cities)
-      .repartition(CachedLayerPartitions)
-      .transform(graft.CacheLifecycle.persist(_))
+    val uninc = graft.CacheLifecycle.persistLeaf(
+      unincorporated(counties, cities).repartition(CachedLayerPartitions))
     val merged = cities.unionByName(counties, allowMissingColumns = true)
 
     Result(cities, counties, uninc, merged)

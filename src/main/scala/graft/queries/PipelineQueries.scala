@@ -90,61 +90,6 @@ object PipelineQueries {
         round(col("AREA_SQMI"), 4).as("area_sqmi"))
       .orderBy(col(C.County), col(C.City), col(C.Coastal))
 
-  // The published frame with its lineage re-rooted at a leaf, memoized
-  // per session (r21 optimization). The flow's logical plan is ~400
-  // nodes, and EVERY Dataset op downstream of publish() pays a
-  // checkAnalysis walk of the whole tree — measured 50 ms/op, 0.55 s
-  // of p03's 1.40 s wall just CONSTRUCTING the diff plan (PhaseProbe:
-  // build 545 ms / analyze 0 / optimize 20 / exec 1030 at 0.11
-  // task-CPU-s). The quality gate's own guide-§3.3 shape ("very wide
-  // joins of many inputs produce enormous plans; materialise an
-  // intermediate to truncate"): `createDataFrame(df.rdd, df.schema)`
-  // re-roots the plan at a LogicalRDD leaf WITHOUT storage or a
-  // driver collect — the RDD stays lazy, every action still executes
-  // the publish projection from the flow's cached layers, it is just
-  // no longer re-walked by the analyzer per downstream op. Same
-  // eviction contract as the flow memo: a memo outliving the caches
-  // it reads would hand consumers a frame that silently rebuilds the
-  // flow per action.
-  private val pubMemo = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, DataFrame]
-
-  graft.CacheLifecycle.onRelease(s => pubMemo.remove(s))
-
-  private def published(s: SparkSession): DataFrame = synchronized {
-    pubMemo.getOrElseUpdate(s, {
-      val df = publish(runFlow(s).merged)
-      s.createDataFrame(df.rdd, df.schema)
-    })
-  }
-
-  // Same lineage truncation for the unincorporated layer (p02's input):
-  // its logical plan embeds the counties/cities branches plus the
-  // erase overlay, and p02's three Dataset ops + count paid ~0.45 s of
-  // wall at 0.01 task-CPU-s walking it. Execution still reads the
-  // flow's cached (and deterministic — contentGuid is content-derived)
-  // layer; only the analyzer-visible tree shrinks.
-  //
-  // Pre-projected to p02's four scalar columns BEFORE the re-root: a
-  // LogicalRDD leaf blocks column pruning, so a full-width re-root
-  // would pump the layer's GEOMETRY column through the Row round-trip
-  // on every p02 action even though p02 reads none of it — a net win
-  // at fixture scale that inverts as geometry width grows (r21
-  // advisor). The narrow frame is what p02 consumes; nothing else
-  // reads this memo.
-  private val unincMemo = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, DataFrame]
-
-  graft.CacheLifecycle.onRelease(s => unincMemo.remove(s))
-
-  private def unincTruncated(s: SparkSession): DataFrame = synchronized {
-    unincMemo.getOrElseUpdate(s, {
-      val df = runFlow(s).unincorporated
-        .select(col(C.City), col(C.County), col(C.Copri), col("AREA_SQMI"))
-      s.createDataFrame(df.rdd, df.schema)
-    })
-  }
-
   /** Oracles: VALUES goldens of the fixture-pipeline output
     * (tools/goldens; the fixtures are fixed, so the result is
     * SF-independent). The transform semantics behind every column are
@@ -153,7 +98,7 @@ object PipelineQueries {
     * driver-visible hash check.
     */
   val p01_bunnyhop_merged: QuerySpec =
-    QuerySpec("p01_bunnyhop_merged", (s, _) => published(s),
+    QuerySpec("p01_bunnyhop_merged", (s, _) => publish(runFlow(s).merged),
       Some(s"""SELECT * FROM ${Goldens.valuesTable("p01_bunnyhop_merged.tsv", Seq(
           "CDTFA_CITY" -> "VARCHAR", "CDTFA_COPRI" -> "VARCHAR",
           "CDTFA_COUNTY" -> "VARCHAR", "CENSUS_PLACE_NAME" -> "VARCHAR",
@@ -171,7 +116,7 @@ object PipelineQueries {
       // the driver compare is order-sensitive, City is the constant
       // 'Unincorporated', and 4dp-rounded areas can collide — so sort
       // by County, Copri AND area
-      unincTruncated(s)
+      runFlow(s).unincorporated
         .select(col(C.City), col(C.County), col(C.Copri),
           round(col("AREA_SQMI"), 4).as("area_sqmi"))
         .orderBy(col(C.County), col(C.Copri), col("area_sqmi"))
@@ -195,7 +140,7 @@ object PipelineQueries {
     val keys = Seq(C.County, C.City, C.Coastal)
     QuerySpec("p03_quality_gate", (s, _) => {
       import s.implicits._
-      val cur = published(s)
+      val cur = publish(runFlow(s).merged)
       // <=> (null-safe), not ===: a plain === filter would also drop
       // the NULL-city county rows (NOT(NULL) is NULL, which filters)
       val prev = cur

@@ -73,9 +73,10 @@ object Writers {
     }
 
   /** GeoJSON FeatureCollection: geometry from WKB, all other columns as
-    * properties. Executors render feature fragments in parallel
-    * (toLocalIterator streams them); the driver only stitches the
-    * envelope — fine for publish-sized layers.
+    * properties. Executors only compute the rows (and `to_json` of
+    * container columns); `toLocalIterator` streams them to the driver
+    * one partition at a time, and the driver renders every feature,
+    * WKB-to-GeoJSON geometry included — fine for publish-sized layers.
     */
   def writeGeoJson(df: DataFrame, geomCol: String, path: String): Unit = {
     val props = df.columns.filterNot(_ == geomCol)

@@ -107,6 +107,63 @@ class CacheLifecycleSpec extends SparkTestBase {
     assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
+  test("a persistLeaf frame is tracked, release drops it, and it stays correct") {
+    spark.catalog.clearCache(); CacheLifecycle.release(spark)
+    val agg = spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count()
+    val leaf = CacheLifecycle.persistLeaf(agg)
+    assert(CacheLifecycle.trackedCount(spark) == 1)
+    assert(leaf.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+    val before = leaf.orderBy("k").collect().toSeq
+    assert(before.map(_.getLong(1)).sum == 1000)
+    assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
+
+    CacheLifecycle.release(spark)
+    assert(CacheLifecycle.trackedCount(spark) == 0)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    // recomputes through the cached RDD's lineage, same rows
+    assert(leaf.orderBy("k").collect().toSeq == before)
+  }
+
+  test("every job the persistLeaf re-root starts carries an SQL execution id") {
+    // jobs started outside an SQL execution re-compiled generated code
+    // on the executors (it cancelled BunnyHop's gain): pin the wrapper
+    spark.catalog.clearCache(); CacheLifecycle.release(spark)
+    val group = "cache-leaf-jobs"
+    val sentinel = "cache-leaf-sentinel"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        p.map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group` => jobs.add(p.flatMap(x => Option(x.getProperty("spark.sql.execution.id"))))
+          case `sentinel` => drained.countDown()
+          case _ =>
+        }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val sc = spark.sparkContext
+    try {
+      sc.setJobGroup(group, "persistLeaf")
+      val leaf = CacheLifecycle.persistLeaf(
+        spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count())
+      // the listener bus is FIFO: once the sentinel's start arrives,
+      // every job the re-root started has been seen
+      sc.setJobGroup(sentinel, "drain")
+      sc.parallelize(1 to 1, 1).count()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(!jobs.isEmpty, "the re-root ran no shuffle stage (test input lost its shuffle?)")
+      assert(jobs.stream().allMatch(_.isDefined), s"jobs without an execution id: $jobs")
+      assert(leaf.count() == 7)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      CacheLifecycle.release(spark)
+    }
+  }
+
   test("release hooks evict the ExtQueries candidate memo with its persist") {
     spark.catalog.clearCache()
     CacheLifecycle.release(spark)

@@ -247,4 +247,26 @@ class BunnyHopFlowSpec extends SparkTestBase {
     assert(rows("Somewhere CDP") == ("Cdp", null))       // capitalize, not initcap
     assert(rows("Paso Robles city") == ("City", "0656000")) // census adjustment applied
   }
+
+  test("published layers are cache-backed leaves: short plans, release-safe") {
+    val layers = Seq("merged" -> result.merged, "cities" -> result.cities,
+      "unincorporated" -> result.unincorporated)
+    // downstream operators plan these trees, not the whole flow's DAG
+    layers.foreach { case (name, df) =>
+      val plan = df.queryExecution.analyzed
+      assert(plan.collectLeaves().forall(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]),
+        s"$name:\n$plan")
+      assert(plan.collect { case p => p }.size <= 8, s"$name:\n$plan")
+    }
+    // after release the same frames recompute through the cached RDDs'
+    // lineage: identical rows, no stale or failed read
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }).sortBy(_.toString).toSeq
+    val before = layers.map { case (_, df) => rows(df) }
+    graft.CacheLifecycle.release(spark)
+    assert(graft.CacheLifecycle.trackedCount(spark) == 0)
+    assert(layers.map { case (_, df) => rows(df) } == before)
+  }
 }
